@@ -670,6 +670,9 @@ def simhash_candidates_sym(
     """
     base, rem = divmod(64, chunks)
     assert rem == 0, "sym probe wants equal chunk widths (64 % chunks == 0)"
+    assert max_hamming is None or max_hamming <= 3 * chunks - 1, (
+        f"max_hamming={max_hamming} is past the sym probe's certainty bound 3*chunks-1={3 * chunks - 1}"
+    )
     width = base
 
     def rows_sql():

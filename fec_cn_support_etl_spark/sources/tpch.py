@@ -10,7 +10,10 @@ collect anything.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -26,10 +29,47 @@ TABLES = (
 )
 
 
+# path -> (stamp, schema Spark inferred for the files with that stamp).
+# Process-wide: it records facts about files, which every session the
+# package builds reads with the same parquet settings.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _stamp(path: str) -> tuple | None:
+    """``(mtime_ns, size)`` of a parquet file, or of every file under a
+    parquet directory; None when the path cannot be stat'ed (missing,
+    or not on the local file system), which leaves it unmemoized."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (st.st_mtime_ns, st.st_size)
+        stamp = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                p = os.path.join(root, f)
+                st = os.stat(p)
+                stamp.append((p, st.st_mtime_ns, st.st_size))
+        return tuple(sorted(stamp))
+    except OSError:
+        return None
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy scan of one table. Spark infers a parquet schema with a job
+    that reads a footer (~98 ms per load against ~16 ms with a known
+    schema, 4-core VM), so the schema it inferred is remembered per path
+    and handed to later loads until the files' stamp changes."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    stamp = _stamp(path)
+    hit = _SCHEMAS.get(path)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if stamp is not None:
+        _SCHEMAS[path] = (stamp, df.schema)
+    return df
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -341,6 +341,13 @@ def test_sym_probe_equivalence(spark):
         sims.unpersist()
 
 
+def test_sym_probe_rejects_hamming_past_certainty_bound(spark):
+    """Past 3*chunks - 1 the sym probe would silently miss pairs."""
+    sims = spark.createDataFrame([(1, 0), (2, 1)], "id long, simhash long")
+    with pytest.raises(AssertionError):
+        D.simhash_candidates_sym(sims, chunks=4, max_hamming=12)
+
+
 def test_cc_small_path_equivalence(spark):
     """Round-7 driver union-find fast path produces the identical
     (id, component) fixpoint as the distributed min-label loop."""
